@@ -22,8 +22,6 @@ import java.nio.file.{Files, Paths}
   *     documented improvement (SURVEY.md §7.4).
   *   - `fixed_headers`: `{stream: [cols]}` projection (P1).
   *   - `strict_validation`: bool (P3).
-  *   - `stage_by_stream`: bool — two-pass staging for many-stream inputs
-  *     (scale path, see [[graft.pipeline.SingerPipeline]]).
   *   - `compression`: parquet codec for all streams (`zstd`, `snappy`,
   *     `gzip`, `none`, ...).
   *   - `partition_by`: `{stream: [cols]}` Hive-style output partitioning.
@@ -31,6 +29,10 @@ import java.nio.file.{Files, Paths}
   *     `{timestamp}` tokens (default `{stream}-{timestamp}.parquet`).
   *     Declared-but-dead in the reference (`target.py:20-24`), honored
   *     here — the second half of the `filepath` improvement pair.
+  *
+  * Any other key is ignored — an older config that still sets the
+  * removed two-pass staging switch gets the same output, each stream
+  * written by one scan of the input.
   *
   * Input is a file of newline-delimited Singer messages rather than a
   * stdin pipe: on a cluster the "pipe" is a distributed path (HDFS/S3
@@ -75,7 +77,6 @@ object SingerMain {
       outDir = str("filepath").getOrElse("."),
       fixedHeaders = fixedHeaders,
       strictValidation = bool("strict_validation"),
-      stageByStream = bool("stage_by_stream"),
       schemaMessages = schemaMessages,
       // north-star write options: parquet codec for every stream plus
       // per-stream Hive-style partition columns ({stream: [cols]})

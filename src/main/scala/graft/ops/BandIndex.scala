@@ -61,7 +61,9 @@ object BandIndex {
     * once and every append re-writes exactly the values it read — so
     * one read (with the cross-segment consistency check) serves every
     * later call on the same version. A compact/retrain writes a NEW
-    * version dir, which is a new cache key; the ~2 driver jobs this
+    * version dir, which is a new cache key (a build or compact drops the
+    * entries of every version root it removes or re-creates, so a
+    * rebuild at a reused path starts clean); the ~2 driver jobs this
     * saves per streaming micro-batch are the point
     * ([[dedupBandIndexStream]] reads params twice per batch otherwise).
     */
@@ -148,8 +150,7 @@ object BandIndex {
     val ver = s"$dir/v0"
     // a re-build at the same path replaces the layout — drop any stale
     // cached parameters for it
-    paramsCache.remove(ver)
-    SegmentStore.initVersion(ver)
+    SegmentStore.initBuild(dir).foreach(paramsCache.remove)
     writeSegment(corpus, ver, 0L, numHashes, bands, shingleSize, storeTexts)
     commitSeg(ver, 0L)
     SegmentStore.markCommitted(ver)
@@ -221,6 +222,9 @@ object BandIndex {
     SegmentStore.clearUncommitted(dir)
     val next = s"$dir/v${versions(dir).map(_._1).max + 1}"
     SegmentStore.initVersion(next)
+    // the number may have served an earlier layout at this path (one the
+    // caller deleted outright), so its cached parameters are not this one's
+    paramsCache.remove(next)
     spark.read.parquet(s"$ver/bands")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),

@@ -73,7 +73,7 @@ import scala.jdk.CollectionConverters._
   * top-ks via TakeOrderedAndProject.
   */
 object Bm25Index {
-  import SegmentStore.{claimSeg, commitSeg, committedSegs, deleteTree, versions}
+  import SegmentStore.{claimSeg, commitSeg, committedSegs, versions}
 
   /** The serving version root (see [[SegmentStore.currentVersionDir]]). */
   private[graft] def currentVersionDir(dir: String): String =
@@ -208,6 +208,9 @@ object Bm25Index {
     * kind and `n_buckets` are constant by construction — the build
     * decides them, every append re-writes the values it read, and a
     * compact/rewrite lands under a NEW version dir (a new cache key).
+    * A build or compact drops the entries of every version root it
+    * removes or (re)creates, so a path reused by a rebuild never serves
+    * an old layout's metadata.
     * The schema probe behind [[isPositional]] lists the whole postings
     * directory and [[readBuckets]] is a read+collect job; both sat on
     * every append/search/delete path (two per streaming micro-batch).
@@ -233,16 +236,13 @@ object Bm25Index {
     val ver = s"$dir/v0"
     // a re-build at the same path replaces the layout — drop any stale
     // cached metadata for it
-    positionalCache.remove(ver)
-    bucketsCache.remove(ver)
-    val vp = java.nio.file.Paths.get(ver)
-    if (java.nio.file.Files.isDirectory(vp)) deleteTree(vp)
-    java.nio.file.Files.createDirectories(vp.resolve("commits"))
-    java.nio.file.Files.createFile(
-      vp.resolve("commits").resolve("0.pending"))
+    SegmentStore.initBuild(dir).foreach { v =>
+      positionalCache.remove(v)
+      bucketsCache.remove(v)
+    }
     writeSegment(df, ver, nBuckets, 0L, textCol, positional)
     commitSeg(ver, 0L)
-    java.nio.file.Files.createFile(vp.resolve("_COMMITTED"))
+    SegmentStore.markCommitted(ver)
   }
 
   /** The committed `n_buckets` for a version root (loud on drift). */
@@ -399,13 +399,13 @@ object Bm25Index {
     val nBuckets = readBuckets(spark, ver, segs)
     // clear stranded uncommitted versions from a prior crashed compact
     // BEFORE picking the target id, so the write cannot collide
-    versions(dir).collect { case (n, false) => n }.foreach { n =>
-      deleteTree(java.nio.file.Paths.get(s"$dir/v$n"))
-    }
+    SegmentStore.clearUncommitted(dir)
     val next = s"$dir/v${versions(dir).map(_._1).max + 1}"
-    val np = java.nio.file.Paths.get(next)
-    java.nio.file.Files.createDirectories(np.resolve("commits"))
-    java.nio.file.Files.createFile(np.resolve("commits").resolve("0.pending"))
+    SegmentStore.initVersion(next)
+    // the number may have served an earlier layout at this path (one the
+    // caller deleted outright), so its cached metadata is not this one's
+    positionalCache.remove(next)
+    bucketsCache.remove(next)
     // meta partials SUM to the post-delete truth (delete segments wrote
     // negative rows) — collected first because the compacted avgdl also
     // re-freezes the impact ordering below
@@ -454,13 +454,11 @@ object Bm25Index {
     // replayed streaming batch can never re-ingest across a compact
     SegmentStore.carryTags(ver, next)
     onStep("written")
-    java.nio.file.Files.createFile(np.resolve("_COMMITTED"))
+    SegmentStore.markCommitted(next)
     onStep("committed")
-    versions(dir).collect { case (n, true) => n }
-      .filter(v => s"$dir/v$v" != next)
-      .foreach(n => deleteTree(java.nio.file.Paths.get(s"$dir/v$n")))
+    SegmentStore.retireOthers(dir, next)
     onStep("retired")
-    val w = java.nio.file.Files.walk(np.resolve("postings"))
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$next/postings"))
     try w.iterator().asScala.count(p =>
       p.getFileName.toString.endsWith(".parquet"))
     finally w.close()

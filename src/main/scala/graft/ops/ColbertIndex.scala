@@ -71,7 +71,8 @@ object ColbertIndex {
     * VERSION dir for the JVM's lifetime: parameters are constant within
     * a version by construction (the build writes them, appends re-write
     * the values they read, a compact lands under a new version dir =
-    * new key) — only the LIVE `n_docs` changes, which is why
+    * new key; builds and compacts drop the entries of the version roots
+    * they remove or re-create) — only the LIVE `n_docs` changes, which is why
     * [[readParamsNDocs]] (the search path) is NOT cached.
     */
   private val paramsCache = new java.util.concurrent.ConcurrentHashMap[
@@ -156,8 +157,7 @@ object ColbertIndex {
     val ver = s"$dir/v0"
     // a re-build at the same path replaces the layout — drop any stale
     // cached parameters for it
-    paramsCache.remove(ver)
-    SegmentStore.initVersion(ver)
+    SegmentStore.initBuild(dir).foreach(paramsCache.remove)
     writeSegment(docs, ver, 0L, dim, maxQueryToks, maxDocToks,
       dfCapPermille, nBuckets, textCol)
     commitSeg(ver, 0L)
@@ -238,6 +238,9 @@ object ColbertIndex {
     SegmentStore.clearUncommitted(dir)
     val next = s"$dir/v${SegmentStore.versions(dir).map(_._1).max + 1}"
     SegmentStore.initVersion(next)
+    // the number may have served an earlier layout at this path (one the
+    // caller deleted outright), so its cached parameters are not this one's
+    paramsCache.remove(next)
     val survivors = spark.read.parquet(s"$ver/ctok")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)

@@ -4,7 +4,7 @@ import graft.functions.Coercions
 import graft.schema.SchemaMapper
 import graft.schema.SchemaMapper.StreamSchema
 import graft.validate.Validator
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -22,9 +22,6 @@ import java.time.{ZoneOffset, ZonedDateTime}
   * @param fixedHeaders     per-stream column projection, P1 (`sinks.py:147-153`).
   * @param strictValidation fail the job on a draft-7 violation, P3
   *                         (`sinks.py:131-139`).
-  * @param stageByStream    scale path for many interleaved streams: one
-  *                         partitioned staging pass instead of one full input
-  *                         scan per stream (see [[SingerPipeline.run]]).
   * @param schemaMessages   pre-supplied Singer SCHEMA message JSONs. When
   *                         set, the discovery scan is skipped entirely —
   *                         at 100 TB a full input pass just to find the
@@ -52,7 +49,6 @@ final case class SingerConfig(
     outDir: String,
     fixedHeaders: Map[String, Seq[String]] = Map.empty,
     strictValidation: Boolean = false,
-    stageByStream: Boolean = false,
     schemaMessages: Option[Seq[String]] = None,
     compression: Option[String] = None,
     partitionBy: Map[String, Seq[String]] = Map.empty,
@@ -91,13 +87,12 @@ final case class IngestResult(
   * shuffle anywhere; every stage is a narrow map/filter, so a 1000-executor
   * cluster scales linearly with input splits.
   *
-  * Scale design (100 TB input): the naive layout runs one full input scan
-  * per stream (text sources have no predicate pushdown). Fine for a handful
-  * of streams; for many, `stageByStream = true` switches to exactly TWO
-  * passes total: pass 1 writes raw record lines to a parquet staging dir
-  * partitioned by stream (a hash-partitioned shuffle-free write), pass 2
-  * runs each stream's typed projection over only its partition directory —
-  * partition pruning makes each per-stream job read only its own bytes.
+  * Batch ingest and every streaming micro-batch
+  * ([[graft.streaming.SingerStream]]) write through ONE per-stream writer
+  * ([[writeStreams]]), so validation, coercion, write options and the K4
+  * empty-output rule cannot drift between them. Scale cost: each stream's
+  * job is one full scan of the input (text sources have no predicate
+  * pushdown), so `n` streams read the input `n` times.
   */
 object SingerPipeline {
 
@@ -223,47 +218,6 @@ object SingerPipeline {
     }.reduce(_.unionByName(_))
   }
 
-  /** RECORD lines of one stream → typed DataFrame: `from_json` with an
-    * all-string struct (P2: missing fields → null, extra fields dropped —
-    * `sinks.py:165-166`) then the E1–E8 coercion projection
-    * ([[graft.functions.Coercions]]).
-    *
-    * PRECONDITION: `recordLines` must already contain only this stream's
-    * RECORD lines (the staged ingest path guarantees it by partition
-    * filter) — a SCHEMA/STATE line has no `$.record` and would emit an
-    * all-null row, not be skipped. Use [[typedRecordsFromLines]] for
-    * unfiltered Singer input.
-    *
-    * `keepRawNulls`: also emit `_raw_null_<prop>` for required fields —
-    * the PRE-coercion nullness [[graft.validate.Validator]] needs so a
-    * present-but-coercion-nulled value (malformed timestamp) isn't
-    * misflagged as a `required` violation. Dropped by enforce/annotate.
-    */
-  def typedRecords(
-      recordLines: DataFrame,
-      ss: StreamSchema,
-      keepRawNulls: Boolean = false): DataFrame =
-    recordLines
-      .select(from_json(get_json_object(col("value"), "$.record"), ss.parseStruct).as("r"))
-      .select(coerceProjection(ss, col("r"), keepRawNulls): _*)
-
-  /** The shared coercion projection (+ optional raw-null flags) over the
-    * parsed all-string record struct — ONE definition for both ingest
-    * shapes so validation semantics can never diverge between them.
-    */
-  private def coerceProjection(
-      ss: StreamSchema,
-      rec: Column,
-      keepRawNulls: Boolean): Seq[Column] = {
-    val coerced = ss.properties.map(p => Coercions.coerce(rec.getField(p.name), p))
-    val rawNulls =
-      if (!keepRawNulls) Seq.empty
-      else ss.properties.filter(p => ss.requiredFields.contains(p.name)).map(p =>
-        rec.getField(p.name).isNull
-          .as(s"${graft.validate.Validator.RawNullPrefix}${p.name}"))
-    coerced ++ rawNulls
-  }
-
   /** Filter + extract + coerce in ONE JSON parse: the message envelope and
     * the record body come out of a single `from_json` whose schema embeds
     * the stream's parse struct. The per-stream alternative — two
@@ -272,7 +226,14 @@ object SingerPipeline {
     * the envelope parse IS the job, so one pass per line per stream is the
     * difference that matters. (Catalyst's JSON expression optimization
     * keeps the parsed struct an attribute — evaluated once, not once per
-    * projected field.)
+    * projected field.) P2: missing fields → null, extra fields dropped
+    * (`sinks.py:165-166`); then the E1–E8 coercions
+    * ([[graft.functions.Coercions]]).
+    *
+    * `keepRawNulls`: also emit `_raw_null_<prop>` for required fields —
+    * the PRE-coercion nullness [[graft.validate.Validator]] needs so a
+    * present-but-coercion-nulled value (malformed timestamp) isn't
+    * misflagged as a `required` violation. Dropped by enforce/annotate.
     */
   def typedRecordsFromLines(
       lines: DataFrame,
@@ -282,30 +243,19 @@ object SingerPipeline {
       StructField("type", StringType, nullable = true),
       StructField("stream", StringType, nullable = true),
       StructField("record", ss.parseStruct, nullable = true)))
+    val rec = col("m.record")
+    val rawNulls =
+      if (!keepRawNulls) Seq.empty
+      else ss.properties.filter(p => ss.requiredFields.contains(p.name)).map(p =>
+        rec.getField(p.name).isNull.as(s"${Validator.RawNullPrefix}${p.name}"))
     lines
       // explode(array(...)) = Generate barrier: the filter predicate below
       // cannot be pushed through it, so the envelope parse runs ONCE per
       // line instead of once for the predicate and once for the projection.
       .select(explode(array(from_json(col("value"), envelope))).as("m"))
       .filter(col("m.type") === "RECORD" && col("m.stream") === ss.stream)
-      .select(coerceProjection(ss, col("m.record"), keepRawNulls): _*)
+      .select(ss.properties.map(p => Coercions.coerce(rec.getField(p.name), p)) ++ rawNulls: _*)
   }
-
-  /** The last-STATE capture, shared by the batch observe, the
-    * empty-registry fallback, and the streaming per-batch observe — ONE
-    * definition because the `monotonically_increasing_id` ordering
-    * subtlety (documented at [[ingest]]'s observeState) is load-bearing
-    * in all three: stamp `_line_id`, then `max_by` the line whose type is
-    * STATE. A fix to the ordering or the STATE predicate propagates
-    * everywhere by construction.
-    */
-  private[graft] def withLineId(df: DataFrame): DataFrame =
-    df.withColumn("_line_id", monotonically_increasing_id())
-
-  private[graft] def lastStateAgg: Column =
-    max_by(
-      col("value"),
-      when(get_json_object(col("value"), "$.type") === "STATE", col("_line_id")))
 
   private val tsFmt = DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss")
 
@@ -326,8 +276,32 @@ object SingerPipeline {
     s"${config.outDir}/$name"
   }
 
-  /** Full batch ingest: Singer JSON lines → one Parquet dataset per stream +
-    * record-count metrics.
+  /** Full batch ingest: Singer JSON lines → one Parquet dataset per stream
+    * at [[outputPath]] (failing if it exists) + record-count metrics, via
+    * [[writeStreams]].
+    */
+  def run(spark: SparkSession, inputPath: String, config: SingerConfig): IngestResult =
+    ingest(spark.read.text(inputPath), config)
+
+  def ingest(lines: DataFrame, config: SingerConfig): IngestResult = {
+    val registry = parseSchemas(lines, config)
+    // fail FAST on a colliding naming scheme — before any write job runs,
+    // not after stream #2 trips over stream #1's output path
+    config.fileNamingScheme.foreach { scheme =>
+      require(registry.size <= 1 || scheme.contains("{stream}"),
+        s"file_naming_scheme '$scheme' has no {stream} token but the input " +
+          s"has ${registry.size} streams — their outputs would collide")
+    }
+    val now = ZonedDateTime.now(ZoneOffset.UTC)
+    writeStreams(lines, registry, config, outputPath(config, _, now), SaveMode.ErrorIfExists)
+  }
+
+  /** The one per-stream writer behind batch ingest ([[ingest]]) and every
+    * streaming micro-batch ([[graft.streaming.SingerStream]]): for each
+    * registered stream, ONE job parses `lines`, coerces the stream's
+    * RECORDs ([[typedRecordsFromLines]]), validates them in strict mode
+    * and writes them to `pathFor(stream)` under `mode`, honoring
+    * `compression` and `partitionBy`.
     *
     * A1 metrics ride on `Observation` (accumulator-backed, collected by the
     * write job itself) — zero extra passes, unlike the reference's
@@ -338,28 +312,12 @@ object SingerPipeline {
     * (`tests/test_integration.py:278-308`) — detected from the observed
     * count and the empty directory removed, again without a pre-pass.
     */
-  def run(spark: SparkSession, inputPath: String, config: SingerConfig): IngestResult =
-    ingest(spark.read.text(inputPath), config)
-
-  def ingest(lines: DataFrame, config: SingerConfig): IngestResult = {
-    val spark = lines.sparkSession
-    val registry = parseSchemas(lines, config)
-    // fail FAST on a colliding naming scheme — before any write job runs,
-    // not after stream #2 trips over stream #1's output path
-    config.fileNamingScheme.foreach { scheme =>
-      require(registry.size <= 1 || scheme.contains("{stream}"),
-        s"file_naming_scheme '$scheme' has no {stream} token but the input " +
-          s"has ${registry.size} streams — their outputs would collide")
-    }
-    val now = ZonedDateTime.now(ZoneOffset.UTC)
-
-    // Per-stream typed projection. Direct path: ONE single-parse job per
-    // stream over the raw lines ([[typedRecordsFromLines]]). Staged path:
-    // records pre-filtered into per-stream partition directories, so the
-    // type/stream predicates are already satisfied and [[typedRecords]]'s
-    // record-only parse suffices.
-    var stagingToClean: Option[java.nio.file.Path] = None
-
+  private[graft] def writeStreams(
+      lines: DataFrame,
+      registry: Map[String, StreamSchema],
+      config: SingerConfig,
+      pathFor: String => String,
+      mode: SaveMode): IngestResult = {
     // Strict mode with a schema using keywords OUTSIDE the Column-encodable
     // set (`uniqueItems`, `oneOf`, `$ref`, ...) engages the row-level
     // draft-7 fallback on the raw record text BEFORE projection — otherwise
@@ -367,7 +325,7 @@ object SingerPipeline {
     // missing feature). Costs extra `get_json_object` walks on exactly the
     // streams that need it; schemas in the SQL subset keep the single-parse
     // fast path untouched.
-    def rowChecked(df: DataFrame, ss: StreamSchema, recordText: Column): DataFrame = {
+    def rowChecked(df: DataFrame, ss: StreamSchema): DataFrame = {
       // the reference validates the FULL record BEFORE fixed_headers
       // projection (sinks.py:131-153): if pruning dropped properties, the
       // Column layer can no longer see their constraints — the row-level
@@ -378,6 +336,10 @@ object SingerPipeline {
           fs.map(_._1).toSet -- ss.properties.map(_.name).toSet
         case _ => Set.empty[String]
       }
+      val recordText = when(
+        get_json_object(col("value"), "$.type") === "RECORD" &&
+          get_json_object(col("value"), "$.stream") === ss.stream,
+        get_json_object(col("value"), "$.record"))
       if (config.strictValidation &&
           (Validator.needsRowValidator(ss.rawSchema) || prunedAway.nonEmpty))
         Validator.enforceRows(df, ss.rawSchema, recordText)
@@ -393,78 +355,41 @@ object SingerPipeline {
     // last line in input order — the canonical stdin-capture layout.
     // Multi-file inputs order by Spark's size-desc listing; Singer defines
     // no cross-file order either.
-    val stateObs = Observation(s"state-${tsFmt.format(now)}")
+    val withLineId = lines.withColumn("_line_id", monotonically_increasing_id())
+    val lastStateAgg = max_by(
+      col("value"),
+      when(get_json_object(col("value"), "$.type") === "STATE", col("_line_id")))
+      .as("last_state")
+    val stateObs = Observation()
     var stateObserved = false
-    def observeState(df: DataFrame): DataFrame =
-      if (stateObserved) df
+    def observedLines: DataFrame =
+      if (stateObserved) lines
       else {
         stateObserved = true
-        withLineId(df)
-          .observe(stateObs, lastStateAgg.as("last_state"))
-          .select(col("value"))
+        withLineId.observe(stateObs, lastStateAgg).select(col("value"))
       }
 
-    val typedFor: (String, StreamSchema) => DataFrame =
-      if (config.stageByStream && registry.size > 1) {
-        // Pass 1: stage raw record lines partitioned by stream. One scan of
-        // the input regardless of stream count; per-stream jobs then prune
-        // to their own partition directory.
-        val stagingDir = s"${config.outDir}/.staging-${tsFmt.format(now)}"
-        stagingToClean = Some(Paths.get(stagingDir))
-        observeState(lines)
-          .filter(get_json_object(col("value"), "$.type") === "RECORD")
-          .withColumn("_stream", get_json_object(col("value"), "$.stream"))
-          .write.partitionBy("_stream").parquet(stagingDir)
-        (stream: String, ss: StreamSchema) => {
-          val pruned = spark.read
-            .schema("value STRING, _stream STRING")
-            .parquet(stagingDir)
-            .filter(col("_stream") === stream)
-            .select(col("value"))
-          typedRecords(
-            rowChecked(pruned, ss, get_json_object(col("value"), "$.record")),
-            ss, keepRawNulls = config.strictValidation)
-        }
-      } else { (stream: String, ss: StreamSchema) =>
-        typedRecordsFromLines(
-          rowChecked(
-            observeState(lines), ss,
-            when(
-              get_json_object(col("value"), "$.type") === "RECORD" &&
-                get_json_object(col("value"), "$.stream") === stream,
-              get_json_object(col("value"), "$.record"))),
-          ss, keepRawNulls = config.strictValidation)
-      }
-
-    // staging is scratch, never output: clean it up in finally — a strict-
-    // validation raise (or any write failure) must not orphan a full copy
-    // of the record input under outDir, accumulating per retry
-    val results =
-      try registry.toSeq.sortBy(_._1).map { case (stream, ss) =>
-        val typed0 = typedFor(stream, ss)
-        val typed = if (config.strictValidation) Validator.enforce(typed0, ss) else typed0
-        val obs = Observation(s"ingest-$stream")
-        val path = outputPath(config, stream, now)
-        val writer = typed.observe(obs, count(lit(1)).as("records")).write
-        config.compression.foreach(c => writer.option("compression", c))
-        config.partitionBy.get(stream).filter(_.nonEmpty)
-          .foreach(cols => writer.partitionBy(cols: _*))
-        writer.parquet(path)
-        val n = obs.get("records").asInstanceOf[Long]
-        if (n == 0L) deleteRecursively(Paths.get(path)) // K4: no records → no file
-        (stream, path, n)
-      }
-      finally stagingToClean.foreach(deleteRecursively)
+    val results = registry.toSeq.sortBy(_._1).map { case (stream, ss) =>
+      val typed0 = typedRecordsFromLines(
+        rowChecked(observedLines, ss), ss, keepRawNulls = config.strictValidation)
+      val typed = if (config.strictValidation) Validator.enforce(typed0, ss) else typed0
+      val obs = Observation()
+      val path = pathFor(stream)
+      val writer = typed.observe(obs, count(lit(1)).as("records")).write.mode(mode)
+      config.compression.foreach(c => writer.option("compression", c))
+      config.partitionBy.get(stream).filter(_.nonEmpty)
+        .foreach(cols => writer.partitionBy(cols: _*))
+      writer.parquet(path)
+      val n = obs.get("records").asInstanceOf[Long]
+      if (n == 0L) deleteRecursively(Paths.get(path)) // K4: no records → no file
+      (stream, path, n)
+    }
 
     // No stream jobs ran (empty registry): a STATE-only input still owes
     // its tap a state echo — dedicated tiny aggregate, nothing else scans.
     val lastStateLine: Option[String] =
       if (stateObserved) Option(stateObs.get("last_state")).map(_.toString)
-      else
-        Option(
-          withLineId(lines)
-            .agg(lastStateAgg.as("last_state"))
-            .head().getString(0))
+      else Option(withLineId.agg(lastStateAgg).head().getString(0))
 
     IngestResult(
       paths = results.collect { case (s, p, n) if n > 0 => s -> p }.toMap,

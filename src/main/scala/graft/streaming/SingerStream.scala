@@ -2,9 +2,7 @@ package graft.streaming
 
 import graft.pipeline.{SingerConfig, SingerPipeline}
 import graft.schema.SchemaMapper.StreamSchema
-import graft.validate.Validator
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Unbounded variant of the Singer ingest (SURVEY.md §1 "Streams vs batch"):
@@ -18,10 +16,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * exactly-once end to end).
   *
   * Schemas must be registered up front (Singer taps emit SCHEMA before the
-  *   first RECORD of a stream; a driver can pre-scan or pass them in). Each
-  * micro-batch routes records per stream through the same coercion
-  * projection as the batch path and appends to one parquet dataset per
-  * stream — so the batch and streaming paths share all semantics.
+  * first RECORD of a stream; a driver can pre-scan or pass them in). Each
+  * micro-batch goes through the batch path's own per-stream writer
+  * ([[SingerPipeline.writeStreams]]) — strict validation, coercion,
+  * `compression`/`partitionBy` and STATE capture included — into
+  * `<outDir>/<stream>.parquet/_batch=<batchId>`; a stream with no records
+  * in a batch leaves no `_batch` directory (K4). So the batch and
+  * streaming paths share all semantics by construction.
   */
 object SingerStream {
 
@@ -57,41 +58,15 @@ object SingerStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         // foreachBatch is AT-LEAST-ONCE: a batch can replay after a crash
-        // between the write and the checkpoint commit. Both effects here
-        // are therefore idempotent in batchId — data lands in a
-        // per-batch partition directory that a replay OVERWRITES, and
-        // metrics go to a per-batch file with totals recomputed
-        // (writeBatchMetrics), never accumulated twice.
-        // STATE passthrough rides an Observation on the first stream's
-        // scan of the batch (same zero-extra-pass trick as the batch
-        // path); the per-batch state file is idempotent in batchId too.
-        val stateObs = org.apache.spark.sql.Observation(s"b$batchId-state")
-        var stateObserved = false
-        def observeState(df: org.apache.spark.sql.DataFrame) =
-          if (stateObserved) df
-          else {
-            stateObserved = true
-            SingerPipeline.withLineId(df)
-              .observe(stateObs, SingerPipeline.lastStateAgg.as("last_state"))
-              .select(col("value"))
-          }
-        val counts = registry.toSeq.sortBy(_._1).map { case (stream, ss) =>
-          val typed0 = SingerPipeline.typedRecordsFromLines(observeState(batch), ss)
-          val typed =
-            if (config.strictValidation) Validator.enforce(typed0, ss) else typed0
-          val obs = org.apache.spark.sql.Observation(s"b$batchId-$stream")
-          typed.observe(obs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("records"))
-            .write.mode("overwrite")
-            .parquet(s"${config.outDir}/$stream.parquet/_batch=$batchId")
-          stream -> obs.get("records").asInstanceOf[Long]
-        }.toMap
-        SingerPipeline.writeBatchMetrics(config.outDir, batchId, counts)
-        if (stateObserved)
-          Option(stateObs.get("last_state")).foreach(line =>
-            SingerPipeline.writeBatchState(
-              config.outDir, batchId, SingerPipeline.stateValue(line.toString)))
-        ()
+        // between the write and the checkpoint commit. Every effect here
+        // is therefore idempotent in batchId — data lands in a per-batch
+        // partition directory that a replay OVERWRITES, and metrics and
+        // state go to per-batch files with totals recomputed
+        // (writeBatchMetrics, writeBatchState), never accumulated twice.
+        val res = SingerPipeline.writeStreams(batch, registry, config,
+          stream => s"${config.outDir}/$stream.parquet/_batch=$batchId", SaveMode.Overwrite)
+        SingerPipeline.writeBatchMetrics(config.outDir, batchId, res.recordCounts)
+        res.lastState.foreach(SingerPipeline.writeBatchState(config.outDir, batchId, _))
       }
       .start()
   }

@@ -44,6 +44,7 @@ object JobProf {
       jobs.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
+      val t0Ms = System.currentTimeMillis() // job times are epoch millis
       val df = graft.SparkEntry.allQueries(name)(spark, sfDir)
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
@@ -54,7 +55,7 @@ object JobProf {
       spark.sparkContext.getPersistentRDDs.values
         .filterNot(r => keep(r.id)).foreach(_.unpersist(blocking = true))
       val js = jobs.values.toSeq.sortBy(_.startMs)
-      var prevEnd = t0 / 1000000L
+      var prevEnd = t0Ms
       var jobMs = 0L; var gapMs = 0L
       println(f"== JOBPROF $name rep$rep total=$sec%.2fs jobs=${js.size} ==")
       js.foreach { j =>

@@ -255,4 +255,37 @@ class BandIndexSpec extends AnyFunSuite with Matchers
     after shouldBe searchRows(rebuilt,
       corpus.filter(col("doc_id") =!= victim))
   }
+
+  test("a rebuild at a reused path replaces a compacted layout: v0 " +
+    "serves the new build, and later maintenance uses its parameters") {
+    val dir = tmp("rebuild")
+    def maintained(): Seq[Long] = {
+      BandIndex.writeBandIndex(docs.filter(col("doc_id") < 200L), dir)
+      BandIndex.appendBandIndex(
+        docs.filter(col("doc_id") >= 200L && col("doc_id") < 250L), dir)
+      BandIndex.compactBandIndex(dir, spark)
+      decide(dir) // also caches v1's parameters
+    }
+    val old = maintained()
+    val rebuilt = docs.filter(col("doc_id") < 100L)
+    val fresh = tmp("rebuild-fresh")
+    Seq(dir, fresh).foreach(BandIndex.writeBandIndex(rebuilt, _,
+      numHashes = 16, bands = 4, shingleSize = 2))
+    BandIndex.currentVersionDir(dir) shouldBe s"$dir/v0"
+    decide(fresh, rebuilt) should not be old
+    decide(dir, rebuilt) shouldBe decide(fresh, rebuilt)
+    // the next compact lands at v1 again: appends and decisions must
+    // sign with the rebuilt layout's parameters, not the removed v1's
+    Seq(dir, fresh).foreach { d =>
+      BandIndex.appendBandIndex(
+        docs.filter(col("doc_id") >= 100L && col("doc_id") < 250L), d)
+      BandIndex.compactBandIndex(d, spark)
+    }
+    BandIndex.currentVersionDir(dir) shouldBe s"$dir/v1"
+    decide(dir) shouldBe decide(fresh)
+    // a directory deleted outright leaves no version for the rebuild to
+    // see: the compact re-creating v1 must still not serve v1's cache
+    SegmentStore.deleteTree(java.nio.file.Paths.get(dir))
+    maintained() shouldBe old
+  }
 }

@@ -601,4 +601,35 @@ class Bm25IndexSpec extends AnyFunSuite with Matchers
     q.stop()
     search(dir) shouldBe direct(terms)
   }
+
+  test("a rebuild at a reused path replaces a compacted layout: v0 " +
+    "serves the new build, and later maintenance uses its parameters") {
+    val n = docs.count()
+    val dir = tmp("rebuild")
+    def maintained(): Seq[org.apache.spark.sql.Row] = {
+      Bm25Index.writeBm25Index(docs.filter(col("doc_id") < n / 2), dir)
+      Bm25Index.appendBm25Index(docs.filter(col("doc_id") >= n / 2), dir)
+      Bm25Index.compactBm25Index(dir, spark)
+      search(dir) // also caches v1's metadata
+    }
+    val old = maintained()
+    val rebuilt = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
+    val fresh = tmp("rebuild-fresh")
+    Seq(dir, fresh).foreach(Bm25Index.writeBm25Index(rebuilt, _, nBuckets = 4))
+    Bm25Index.currentVersionDir(dir) shouldBe s"$dir/v0"
+    search(fresh) should not be old
+    search(dir) shouldBe search(fresh)
+    // the next compact lands at v1 again: it must serve the rebuilt
+    // layout's bucket count, not the removed v1's cached one
+    Seq(dir, fresh).foreach { d =>
+      Bm25Index.appendBm25Index(docs.filter(pmod(col("doc_id"), lit(3)) === 0), d)
+      Bm25Index.compactBm25Index(d, spark)
+    }
+    Bm25Index.currentVersionDir(dir) shouldBe s"$dir/v1"
+    search(dir) shouldBe search(fresh)
+    // a directory deleted outright leaves no version for the rebuild to
+    // see: the compact re-creating v1 must still not serve v1's cache
+    SegmentStore.deleteTree(java.nio.file.Paths.get(dir))
+    maintained() shouldBe old
+  }
 }

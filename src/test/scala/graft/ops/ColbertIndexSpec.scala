@@ -152,4 +152,42 @@ class ColbertIndexSpec extends AnyFunSuite with Matchers
     ColbertIndex.searchColbertIndex(
       spark, dir, queriesOf(docs), k = 5).count() shouldBe 0L
   }
+
+  test("a rebuild at a reused path replaces a compacted layout: v0 " +
+    "serves the new build, and later maintenance uses its parameters") {
+    val half = docs.count() / 2
+    def search(d: String) = rows(ColbertIndex.searchColbertIndex(
+      spark, d, queriesOf(docs), k = 5))
+    val dir = tmp("rebuild")
+    def maintained(): Seq[Seq[Any]] = {
+      ColbertIndex.writeColbertIndex(
+        docs.filter(col("doc_id") < half), dir, dfCapPermille = 750)
+      ColbertIndex.appendColbertIndex(docs.filter(col("doc_id") >= half), dir)
+      ColbertIndex.compactColbertIndex(dir, spark)
+      // an empty delete reads (and caches) v1's parameters
+      ColbertIndex.deleteFromColbertIndex(
+        dir, docs.filter(col("doc_id") < 0).select("doc_id"), spark) shouldBe 0L
+      search(dir)
+    }
+    val old = maintained()
+    val rebuilt = docs.filter(col("doc_id") < half)
+    val fresh = tmp("rebuild-fresh")
+    Seq(dir, fresh).foreach(ColbertIndex.writeColbertIndex(rebuilt, _,
+      dim = 8, dfCapPermille = 500, nBuckets = 4))
+    ColbertIndex.currentVersionDir(dir) shouldBe s"$dir/v0"
+    search(fresh) should not be old
+    search(dir) shouldBe search(fresh)
+    // the next compact lands at v1 again; an append after it must use the
+    // rebuilt layout's parameters, not the removed v1's cached ones
+    Seq(dir, fresh).foreach { d =>
+      ColbertIndex.compactColbertIndex(d, spark)
+      ColbertIndex.appendColbertIndex(docs.filter(col("doc_id") >= half), d)
+    }
+    ColbertIndex.currentVersionDir(dir) shouldBe s"$dir/v1"
+    search(dir) shouldBe search(fresh)
+    // a directory deleted outright leaves no version for the rebuild to
+    // see: the compact re-creating v1 must still not serve v1's cache
+    SegmentStore.deleteTree(java.nio.file.Paths.get(dir))
+    maintained() shouldBe old
+  }
 }

@@ -137,10 +137,10 @@ class SingerPipelineSpec extends AnyFunSuite with Matchers
     }
     e.getMessage should include("strict_validation")
     e.getMessage should include("$.tags: uniqueItems")
-    // staged path takes the same check
+    // the same check holds with another stream in the input
     val e2 = intercept[Exception] {
       SingerPipeline.run(spark, write(Seq(schema, usersSchema, good, bad)),
-        SingerConfig(tmp(), strictValidation = true, stageByStream = true))
+        SingerConfig(tmp(), strictValidation = true))
     }
     e2.getMessage should include("$.tags: uniqueItems")
   }
@@ -158,12 +158,14 @@ class SingerPipelineSpec extends AnyFunSuite with Matchers
     res.recordCounts shouldBe Map("users" -> 2L)
     // ...and the LAST state value is surfaced for the echo
     res.lastState shouldBe Some("""{"bookmarks":{"users":{"id":"u2"}}}""")
-    // staged path agrees
-    val staged = SingerPipeline.run(spark, input,
-      SingerConfig(tmp(), stageByStream = true,
+    // pre-supplied schemas for two streams, one without records: the
+    // echo still rides the first stream's scan
+    val twoStreams = SingerPipeline.run(spark, input,
+      SingerConfig(tmp(),
         schemaMessages = Some(Seq(usersSchema,
           """{"type": "SCHEMA", "stream": "orders", "schema": {"type": "object", "properties": {"id": {"type": ["string", "null"]}}}, "key_properties": ["id"]}"""))))
-    staged.lastState shouldBe Some("""{"bookmarks":{"users":{"id":"u2"}}}""")
+    twoStreams.recordCounts shouldBe Map("users" -> 2L, "orders" -> 0L)
+    twoStreams.lastState shouldBe Some("""{"bookmarks":{"users":{"id":"u2"}}}""")
     // no STATE lines → no echo
     val none = SingerPipeline.run(
       spark,
@@ -285,14 +287,15 @@ class SingerPipelineSpec extends AnyFunSuite with Matchers
     spark.read.parquet(res.paths("users")).columns.toSeq shouldBe Seq("id", "name")
   }
 
-  test("staged-by-stream path produces identical output (scale path)") {
+  test("two streams in one input each land in their own output") {
     val input = write(Seq(
       usersSchema,
       """{"type": "SCHEMA", "stream": "orders", "schema": {"type": "object", "properties": {"id": {"type": ["string", "null"]}, "amount": {"type": ["number", "null"]}}}, "key_properties": ["id"]}""",
       """{"type": "RECORD", "stream": "users", "record": {"id": "u1", "name": "alice"}}""",
       """{"type": "RECORD", "stream": "orders", "record": {"id": "o1", "amount": 10.5}}"""))
-    val res = SingerPipeline.run(spark, input, SingerConfig(tmp(), stageByStream = true))
+    val res = SingerPipeline.run(spark, input, SingerConfig(tmp()))
     res.recordCounts shouldBe Map("users" -> 1L, "orders" -> 1L)
+    spark.read.parquet(res.paths("users")).select("name").head.getString(0) shouldBe "alice"
     spark.read.parquet(res.paths("orders")).select("amount").head.getDouble(0) shouldBe 10.5
   }
 
