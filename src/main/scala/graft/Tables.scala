@@ -45,6 +45,21 @@ object Tables {
   * partitions = cores (not the 200 default — at sf0.1 on local[32] the
   * scheduler overhead of 200 tiny tasks per exchange dominates), AQE on for
   * runtime coalescing/skew handling, nanos-as-long for the events table.
+  *
+  * Generated code is compiled once per JVM and reused: the codegen cache
+  * holds 4096 classes (Spark's default is 100), and class names carry no
+  * stage id. A search of a persisted index plans several small queries per
+  * call; BM25 search, band decision and IVF search together need about 150
+  * distinct classes, so a 100-entry LRU evicted each class before its next
+  * use and every call recompiled. The measured working sets: the
+  * index-lifecycle benchmark JVM about 520 classes (lifecycle 340, search
+  * loop 130, output check 50), the 125-query `graft.Bench` gate surface
+  * more than 100 (its `q_fuzzy_join` ran 1.4 s with its classes cached and
+  * 3.6 s evicted). A cached entry costs memory only once compiled, so the
+  * bound is a ceiling, not a reservation. AQE numbers whole-stage codegen
+  * stages in the order its query stages finish, which varies from run to
+  * run; with the stage id in the class name, the same plan produced a new
+  * class body (a cache miss) whenever that order changed.
   */
 object Sessions {
   /** Per-process warehouse location (see builder note) with best-effort
@@ -75,6 +90,9 @@ object Sessions {
       // UTC session tz above); NTZ would reject unix_micros & friends
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      // compile once per JVM (see the object note)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // bucketed tables (Layout.writeBucketed) live in the catalog
       // warehouse — keep it out of the repo working tree, and make it

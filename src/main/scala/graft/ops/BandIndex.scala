@@ -39,7 +39,7 @@ import scala.jdk.CollectionConverters._
   *   - `v<N>/commits/` — per-segment `.pending`/`.commit` markers.
   */
 object BandIndex {
-  import SegmentStore.{claimSeg, commitSeg, committedSegs, versions}
+  import SegmentStore.{claimSeg, commitSeg, committedSegs, readSide, versions}
 
   private[graft] def currentVersionDir(dir: String): String =
     SegmentStore.currentVersionDir(dir, "band index")
@@ -50,7 +50,7 @@ object BandIndex {
     val path = java.nio.file.Paths.get(s"$ver/deletes")
     if (!java.nio.file.Files.isDirectory(path))
       spark.range(0).select(col("id").as("doc_id"))
-    else spark.read.parquet(path.toString)
+    else readSide(spark, path.toString)
       .filter(col("seg").isin(segs: _*))
       .select("doc_id").distinct()
   }
@@ -73,7 +73,7 @@ object BandIndex {
   private def readParams(spark: SparkSession, ver: String,
       segs: Seq[Long]): (Int, Int, Int) =
     paramsCache.computeIfAbsent(ver, _ => {
-      val rows = spark.read.parquet(s"$ver/meta")
+      val rows = readSide(spark, s"$ver/meta")
         .filter(col("seg").isin(segs: _*))
         .select("n_hashes", "bands", "shingle_size").distinct().collect()
       require(rows.length == 1,
@@ -86,6 +86,9 @@ object BandIndex {
     * pin for both the decision and this write — signing is a
     * deterministic per-row function of `(doc_id, text)`, so pre-signed
     * rows filtered to `docs`' ids are identical to re-signing `docs`).
+    * The id filter is a plain semi-join: `docs` is a micro-batch's
+    * survivors, which carry no size bound, so AQE picks the join from
+    * their measured size.
     */
   private def writeSegment(docs: DataFrame, ver: String, seg: Long,
       numHashes: Int, bands: Int, shingleSize: Int,
@@ -95,7 +98,7 @@ object BandIndex {
       .toDF("n_hashes", "bands", "shingle_size", "seg")
       .coalesce(1).write.mode("append").parquet(s"$ver/meta")
     preBands
-      .map(_.join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_semi"))
+      .map(_.join(docs.select("doc_id"), Seq("doc_id"), "left_semi"))
       .getOrElse(
         Dedup.minHashBandsPortable(docs, numHashes, bands, shingleSize))
       .select(col("bucket"), col("doc_id"), lit(seg).as("seg"),
@@ -125,7 +128,7 @@ object BandIndex {
       s"band index at $dir stores no texts (build with storeTexts = " +
         "true for self-contained verification)")
     val segs = committedSegs(ver)
-    spark.read.parquet(s"$ver/texts")
+    readSide(spark, s"$ver/texts")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
@@ -194,7 +197,7 @@ object BandIndex {
     val ver = currentVersionDir(dir)
     val segs = committedSegs(ver)
     val ids = deleteIds.select(col("doc_id")).distinct()
-    val present = spark.read.parquet(s"$ver/bands")
+    val present = readSide(spark, s"$ver/bands")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
@@ -225,7 +228,7 @@ object BandIndex {
     // the number may have served an earlier layout at this path (one the
     // caller deleted outright), so its cached parameters are not this one's
     paramsCache.remove(next)
-    spark.read.parquet(s"$ver/bands")
+    readSide(spark, s"$ver/bands")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
@@ -234,7 +237,7 @@ object BandIndex {
       .repartition(col("band"))
       .write.mode("overwrite").partitionBy("band").parquet(s"$next/bands")
     if (isTextStored(ver))
-      spark.read.parquet(s"$ver/texts")
+      readSide(spark, s"$ver/texts")
         .filter(col("seg").isin(segs: _*))
         .join(broadcast(committedDeletes(spark, ver, segs)),
           Seq("doc_id"), "left_anti")
@@ -310,7 +313,7 @@ object BandIndex {
     val ver = currentVersionDir(dir)
     val segs = committedSegs(ver)
     val (nh, nb, sh) = readParams(spark, ver, segs)
-    val corpusBands = spark.read.parquet(s"$ver/bands")
+    val corpusBands = readSide(spark, s"$ver/bands")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
@@ -412,7 +415,7 @@ object BandIndex {
         // recovery: the segment already holds this batch's survivors —
         // deliver them from the layout, bit-identical to the lost send
         sink(storedTexts(spark, dir)
-          .join(spark.read.parquet(s"$ver/texts")
+          .join(readSide(spark, s"$ver/texts")
             .filter(col("seg") === seg).select("doc_id").distinct(),
             Seq("doc_id"), "left_semi"), batchId)
         false
@@ -467,7 +470,7 @@ object BandIndex {
       newBands: DataFrame, corpusTexts: DataFrame,
       threshold: Double, maxBucket: Int, shingleSize: Int): DataFrame = {
     val segs = committedSegs(ver)
-    val corpusBands = spark.read.parquet(s"$ver/bands")
+    val corpusBands = readSide(spark, s"$ver/bands")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")

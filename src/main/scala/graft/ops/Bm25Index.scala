@@ -73,7 +73,7 @@ import scala.jdk.CollectionConverters._
   * top-ks via TakeOrderedAndProject.
   */
 object Bm25Index {
-  import SegmentStore.{claimSeg, commitSeg, committedSegs, versions}
+  import SegmentStore.{claimSeg, commitSeg, committedSegs, readSide, versions}
 
   /** The serving version root (see [[SegmentStore.currentVersionDir]]). */
   private[graft] def currentVersionDir(dir: String): String =
@@ -85,7 +85,7 @@ object Bm25Index {
     val path = java.nio.file.Paths.get(s"$ver/deletes")
     if (!java.nio.file.Files.isDirectory(path))
       spark.range(0).select(col("id").as("doc_id"))
-    else spark.read.parquet(path.toString)
+    else readSide(spark, path.toString)
       .filter(col("seg").isin(segs: _*))
       .select("doc_id").distinct()
   }
@@ -202,7 +202,7 @@ object Bm25Index {
     */
   private def isPositional(spark: SparkSession, ver: String): Boolean =
     positionalCache.computeIfAbsent(ver, _ =>
-      spark.read.parquet(s"$ver/postings").columns.contains("positions"))
+      readSide(spark, s"$ver/postings").columns.contains("positions"))
 
   /** Per-VERSION metadata caches (JVM lifetime): a version's layout
     * kind and `n_buckets` are constant by construction — the build
@@ -249,13 +249,38 @@ object Bm25Index {
   private def readBuckets(spark: SparkSession, ver: String,
       segs: Seq[Long]): Int =
     bucketsCache.computeIfAbsent(ver, _ => {
-      val rows = spark.read.parquet(s"$ver/meta")
+      val rows = readSide(spark, s"$ver/meta")
         .filter(col("seg").isin(segs: _*))
         .select("n_buckets").distinct().collect().map(_.getInt(0))
       require(rows.length == 1,
         s"BM25 index at $ver has inconsistent n_buckets: ${rows.mkString(",")}")
       rows.head
     }).intValue()
+
+  /** The live corpus stats `(n_docs, sum_dl)`: the committed meta
+    * partials summed (delete segments wrote negative ones).
+    */
+  private def corpusStats(spark: SparkSession, ver: String,
+      segs: Seq[Long]): (Long, Long) = {
+    val row = readSide(spark, s"$ver/meta")
+      .filter(col("seg").isin(segs: _*))
+      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
+      .collect()(0)
+    (row.getLong(0), row.getLong(1))
+  }
+
+  /** The bucket a term's postings live in: `pmod(hash(term), nBuckets)`
+    * exactly as the write routes it, evaluated on the driver with the
+    * engine's own Murmur3 (seed 42, as `hash()` uses; a null term hashes
+    * to the seed, as there), so a search plans its bucket filter
+    * without a Spark job.
+    */
+  private[graft] def termBucket(term: String, nBuckets: Int): Int = {
+    val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
+      .hash(org.apache.spark.unsafe.types.UTF8String.fromString(term),
+        org.apache.spark.sql.types.StringType, 42L).toInt
+    ((h % nBuckets) + nBuckets) % nBuckets
+  }
 
   /** INCREMENTALLY add new documents (UNSEEN doc_ids — re-adding an
     * indexed id would double its postings, as in any inverted index) as
@@ -359,7 +384,7 @@ object Bm25Index {
     val segs = committedSegs(ver)
     val nBuckets = readBuckets(spark, ver, segs)
     val ids = deleteIds.select(col("doc_id")).distinct()
-    val surviving = spark.read.parquet(s"$ver/postings")
+    val surviving = readSide(spark, s"$ver/postings")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
@@ -409,11 +434,7 @@ object Bm25Index {
     // meta partials SUM to the post-delete truth (delete segments wrote
     // negative rows) — collected first because the compacted avgdl also
     // re-freezes the impact ordering below
-    val metaRow = spark.read.parquet(s"$ver/meta")
-      .filter(col("seg").isin(segs: _*))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .collect()(0)
-    val (mDocs, mDl) = (metaRow.getLong(0), metaRow.getLong(1))
+    val (mDocs, mDl) = corpusStats(spark, ver, segs)
     val compactCols =
       Seq(col("term"), col("doc_id"), col("tf"), col("dl")) ++
         (if (isPositional(spark, ver)) Seq(col("positions")) else Nil) ++
@@ -424,7 +445,7 @@ object Bm25Index {
     // and the delete-stale dictionary df rebuilds exact from survivors
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy("term").orderBy(desc("imp"), asc("doc_id"))
-    val survivors = spark.read.parquet(s"$ver/postings")
+    val survivors = readSide(spark, s"$ver/postings")
       .filter(col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
@@ -489,26 +510,17 @@ object Bm25Index {
     require(terms.nonEmpty, "searchBm25Index needs at least one query term")
     val ver = currentVersionDir(dir)
     val segs = committedSegs(ver)
-    val metas = spark.read.parquet(s"$ver/meta")
-      .filter(col("seg").isin(segs: _*))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .collect()(0)
-    val nDocs = metas.getLong(0)
-    val sumDl = metas.getLong(1)
+    val (nDocs, sumDl) = corpusStats(spark, ver, segs)
     val nBuckets = readBuckets(spark, ver, segs)
     // normalize exactly as bm25 does; multiplicity keeps duplicate
     // query terms contributing like bm25's duplicated score columns
     val normed = terms.map(_.trim.toLowerCase(java.util.Locale.ROOT))
     val mult = normed.groupBy(identity).view.mapValues(_.size.toLong).toSeq
     import spark.implicits._
-    // buckets via the ENGINE's own hash on a terms-sized frame, so the
-    // probe can never disagree with the write-time routing
     val termFrame = mult.toDF("term", "mult")
-      .withColumn("term_bucket", pmod(hash(col("term")), lit(nBuckets)))
-    val probed = termFrame.select("term_bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
     val distinctTerms = mult.map(_._1)
-    val surviving = spark.read.parquet(s"$ver/postings")
+    val probed = distinctTerms.map(termBucket(_, nBuckets)).distinct
+    val surviving = readSide(spark, s"$ver/postings")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) && col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
@@ -518,7 +530,7 @@ object Bm25Index {
     // combined count over rows already in hand — and it makes the
     // post-delete df exact by construction
     val dfTab = surviving.groupBy("term").agg(count(lit(1)).as("df"))
-      .join(termFrame.select("term", "mult"), "term")
+      .join(termFrame, "term")
     // the EXACT bm25 score expression over the same long/double types:
     // idf from long df and long n_docs, tf cast to double, avgdl as
     // long/long division — identical operand values and op tree give
@@ -583,30 +595,23 @@ object Bm25Index {
     require(quota > 0, s"quota must be positive, got $quota")
     val ver = currentVersionDir(dir)
     require(
-      spark.read.parquet(s"$ver/postings").columns.contains("imp_rank") &&
+      readSide(spark, s"$ver/postings").columns.contains("imp_rank") &&
         java.nio.file.Files.isDirectory(
           java.nio.file.Paths.get(s"$ver/terms")),
       s"BM25 index at $dir predates impact ordering (no imp_rank/terms " +
         "dictionary); rebuild or compact it before pruned search")
     val segs = committedSegs(ver)
-    val metas = spark.read.parquet(s"$ver/meta")
-      .filter(col("seg").isin(segs: _*))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .collect()(0)
-    val nDocs = metas.getLong(0)
-    val sumDl = metas.getLong(1)
+    val (nDocs, sumDl) = corpusStats(spark, ver, segs)
     val nBuckets = readBuckets(spark, ver, segs)
     val normed = terms.map(_.trim.toLowerCase(java.util.Locale.ROOT))
     val mult = normed.groupBy(identity).view.mapValues(_.size.toLong).toSeq
     import spark.implicits._
     val termFrame = mult.toDF("term", "mult")
-      .withColumn("term_bucket", pmod(hash(col("term")), lit(nBuckets)))
-    val probed = termFrame.select("term_bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
     val distinctTerms = mult.map(_._1)
+    val probed = distinctTerms.map(termBucket(_, nBuckets)).distinct
     // the pruned scan: partition filter + term pushdown + the impact
     // cutoff — rowgroups past a term's top-quota never decompress
-    val pruned = spark.read.parquet(s"$ver/postings")
+    val pruned = readSide(spark, s"$ver/postings")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) &&
         col("seg").isin(segs: _*) && col("imp_rank") <= quota)
@@ -614,11 +619,11 @@ object Bm25Index {
         Seq("doc_id"), "left_anti")
     // df from the dictionary partials (same pruned directories), NOT
     // from the posting scan — the quota caps what the scan can count
-    val dfTab = spark.read.parquet(s"$ver/terms")
+    val dfTab = readSide(spark, s"$ver/terms")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) && col("seg").isin(segs: _*))
       .groupBy("term").agg(sum("df").as("df"))
-      .join(termFrame.select("term", "mult"), "term")
+      .join(termFrame, "term")
     // the EXACT searchBm25Index score tree (bit-identical doubles,
     // identical micro quantization) — only the df SOURCE differs
     val avgdl = lit(sumDl) / lit(nDocs)
@@ -666,12 +671,7 @@ object Bm25Index {
       b: Double = 0.75): DataFrame = {
     val ver = currentVersionDir(dir)
     val segs = committedSegs(ver)
-    val metas = spark.read.parquet(s"$ver/meta")
-      .filter(col("seg").isin(segs: _*))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .collect()(0)
-    val nDocs = metas.getLong(0)
-    val sumDl = metas.getLong(1)
+    val (nDocs, sumDl) = corpusStats(spark, ver, segs)
     val nBuckets = readBuckets(spark, ver, segs)
     val qRows = queries
       .select(col("query_id"),
@@ -683,10 +683,8 @@ object Bm25Index {
     import spark.implicits._
     val qFrame = qRows.toDF("query_id", "term", "mult")
     val distinctTerms = qRows.map(_._2).distinct
-    val probed = distinctTerms.toDF("term")
-      .select(pmod(hash(col("term")), lit(nBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val surviving = spark.read.parquet(s"$ver/postings")
+    val probed = distinctTerms.map(termBucket(_, nBuckets)).distinct
+    val surviving = readSide(spark, s"$ver/postings")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) && col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),
@@ -735,18 +733,13 @@ object Bm25Index {
     require(quota > 0, s"quota must be positive, got $quota")
     val ver = currentVersionDir(dir)
     require(
-      spark.read.parquet(s"$ver/postings").columns.contains("imp_rank") &&
+      readSide(spark, s"$ver/postings").columns.contains("imp_rank") &&
         java.nio.file.Files.isDirectory(
           java.nio.file.Paths.get(s"$ver/terms")),
       s"BM25 index at $dir predates impact ordering (no imp_rank/terms " +
         "dictionary); rebuild or compact it before pruned search")
     val segs = committedSegs(ver)
-    val metas = spark.read.parquet(s"$ver/meta")
-      .filter(col("seg").isin(segs: _*))
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .collect()(0)
-    val nDocs = metas.getLong(0)
-    val sumDl = metas.getLong(1)
+    val (nDocs, sumDl) = corpusStats(spark, ver, segs)
     val nBuckets = readBuckets(spark, ver, segs)
     val qRows = queries
       .select(col("query_id"), explode(col("terms")).as("t"))
@@ -758,16 +751,14 @@ object Bm25Index {
     import spark.implicits._
     val qFrame = qRows.toDF("query_id", "term", "mult")
     val distinctTerms = qRows.map(_._2).distinct
-    val probed = distinctTerms.toDF("term")
-      .select(pmod(hash(col("term")), lit(nBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val pruned = spark.read.parquet(s"$ver/postings")
+    val probed = distinctTerms.map(termBucket(_, nBuckets)).distinct
+    val pruned = readSide(spark, s"$ver/postings")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) &&
         col("seg").isin(segs: _*) && col("imp_rank") <= quota)
       .join(broadcast(committedDeletes(spark, ver, segs)),
         Seq("doc_id"), "left_anti")
-    val dfTab = spark.read.parquet(s"$ver/terms")
+    val dfTab = readSide(spark, s"$ver/terms")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) && col("seg").isin(segs: _*))
       .groupBy("term").agg(sum("df").as("df"))
@@ -804,7 +795,7 @@ object Bm25Index {
     val segs = committedSegs(ver)
     // dictionary partials sum per term (delete staleness applies as in
     // the pruned search — stats are exact on a clean/compacted index)
-    val byTerm = spark.read.parquet(s"$ver/terms")
+    val byTerm = readSide(spark, s"$ver/terms")
       .filter(col("seg").isin(segs: _*))
       .groupBy("term").agg(sum("df").as("df"))
     // unpartitioned window over the DISTINCT-df table — bounded (df
@@ -824,7 +815,7 @@ object Bm25Index {
           .as("df_p500"),
         min(when(col("cum") * 1000 >= col("n_terms") * 990, col("df")))
           .as("df_p990"))
-    spark.read.parquet(s"$ver/meta")
+    readSide(spark, s"$ver/meta")
       .filter(col("seg").isin(segs: _*))
       .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
       .crossJoin(broadcast(qs))
@@ -896,11 +887,8 @@ object Bm25Index {
     val nBuckets = readBuckets(spark, ver, segs)
     val normed = phrase.map(_.trim.toLowerCase(java.util.Locale.ROOT))
     val distinctTerms = normed.distinct
-    import spark.implicits._
-    val probed = distinctTerms.toDF("term")
-      .select(pmod(hash(col("term")), lit(nBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val tp = spark.read.parquet(s"$ver/postings")
+    val probed = distinctTerms.map(termBucket(_, nBuckets)).distinct
+    val tp = readSide(spark, s"$ver/postings")
       .filter(col("term_bucket").isin(probed: _*) &&
         col("term").isin(distinctTerms: _*) && col("seg").isin(segs: _*))
       .join(broadcast(committedDeletes(spark, ver, segs)),

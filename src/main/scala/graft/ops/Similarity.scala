@@ -1582,7 +1582,7 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/codebook")
     spark.range(1).select(lit(cellCount).cast("int").as("n_cells"))
       .write.mode("overwrite").parquet(s"$dir/meta")
-    val book = spark.read.parquet(s"$dir/codebook")
+    val book = SegmentStore.readSide(spark, s"$dir/codebook")
     ivfAssignHierProbe(embeddings, cellCount, 1, centroids = Some(book))
       .select("vec_id", "qv", "qn", "cell_id")
       .write.mode("overwrite").partitionBy("cell_id").parquet(s"$dir/index")
@@ -1616,8 +1616,8 @@ object Similarity {
   private[graft] def readIndexCells(spark: SparkSession, dir: String): Int = {
     val metaPath = java.nio.file.Paths.get(s"$dir/meta")
     if (java.nio.file.Files.isDirectory(metaPath))
-      spark.read.parquet(s"$dir/meta").collect()(0).getInt(0)
-    else spark.read.parquet(s"$dir/codebook").count().toInt
+      SegmentStore.readSide(spark, s"$dir/meta").collect()(0).getInt(0)
+    else SegmentStore.readSide(spark, s"$dir/codebook").count().toInt
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit = {
@@ -1722,7 +1722,7 @@ object Similarity {
   def appendIvfIndex(embeddings: DataFrame, dir: String): Unit = {
     val spark = embeddings.sparkSession
     recoverIvfIndex(dir)
-    val book = spark.read.parquet(s"$dir/codebook")
+    val book = SegmentStore.readSide(spark, s"$dir/codebook")
     ivfAssignHierProbe(embeddings, readIndexCells(spark, dir), 1,
       centroids = Some(book))
       .select("vec_id", "qv", "qn", "cell_id")
@@ -1761,7 +1761,7 @@ object Similarity {
     // before this swap begins, so the renames cannot collide and
     // recovery cannot misread a stale aside as part of THIS swap
     clearSwapAsides(dir)
-    spark.read.parquet(s"$dir/index")
+    SegmentStore.readSide(spark, s"$dir/index")
       .select(col("vec_id"), col("qv"), col("qn"),
         col("cell_id").cast("long").as("cell_id"))
       .repartition(col("cell_id"))
@@ -1832,7 +1832,7 @@ object Similarity {
       onSwapStep: String => Unit = _ => ()): Int = {
     recoverIvfIndex(dir)
     clearSwapAsides(dir)
-    val index = spark.read.parquet(s"$dir/index")
+    val index = SegmentStore.readSide(spark, s"$dir/index")
     val emb = index.select(col("vec_id"),
       transform(col("qv"), x => x.cast("double") / 10000.0).as("embedding"))
     val k =
@@ -1842,7 +1842,7 @@ object Similarity {
     Dedup.releaseCheckpoints(book)
     spark.range(1).select(lit(k).cast("int").as("n_cells"))
       .write.mode("overwrite").parquet(s"$dir/meta_new")
-    val bookBack = spark.read.parquet(s"$dir/codebook_new")
+    val bookBack = SegmentStore.readSide(spark, s"$dir/codebook_new")
     ivfAssignHierProbe(emb, k, 1, centroids = Some(bookBack))
       .select("vec_id", "qv", "qn", "cell_id")
       .write.mode("overwrite").partitionBy("cell_id")
@@ -1878,11 +1878,12 @@ object Similarity {
     * rows for BOTH layout and search answers, and a fully-emptied cell
     * disappears from the layout).
     *
-    * Mechanics: one partition-pruned scan finds the touched cells
-    * (`cell_id IN` literals from a bounded deleted-batch collect is
+    * Mechanics: one scan finds the touched cells and how many rows each
+    * loses (`cell_id IN` literals from a bounded deleted-batch collect is
     * wrong here — the deleted ids' cells are unknown, so this is a
     * vec_id semi-join over the index, the one full scan the operation
-    * fundamentally needs); the remainder of ONLY those cells rewrites
+    * fundamentally needs, counted per cell); the remainder of ONLY those
+    * cells rewrites
     * under dynamic partition overwrite (untouched partitions are not
     * in the written set, so the writer leaves them alone); cells whose
     * every member was deleted emit no rows — their directories are
@@ -1894,15 +1895,17 @@ object Similarity {
       spark: SparkSession): Long = {
     recoverIvfIndex(dir)
     val ids = deleteIds.select(col("vec_id")).distinct()
-    val index = spark.read.parquet(s"$dir/index")
-    val touched = index.join(ids, Seq("vec_id"), "left_semi")
-      .select(col("cell_id").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    if (touched.isEmpty) return 0L
+    val index = SegmentStore.readSide(spark, s"$dir/index")
+    // rows to delete per touched cell: the touched set and the returned
+    // count in one job
+    val deletedPerCell = index.join(ids, Seq("vec_id"), "left_semi")
+      .groupBy(col("cell_id").cast("long")).count()
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    if (deletedPerCell.isEmpty) return 0L
+    val touched = deletedPerCell.map(_._1)
     // raw (pre-cast) partition-column filter so pruning reaches the scan
     val touchedRows = index
       .filter(col("cell_id").isin(touched.map(c => lit(c)): _*))
-    val before = touchedRows.count()
     val remainder = touchedRows
       .join(ids, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("qv"), col("qn"),
@@ -1921,7 +1924,6 @@ object Similarity {
       .parquet(s"$dir/index")
     val survivors = remainder.select("cell_id").distinct()
       .collect().map(_.getLong(0)).toSet
-    val after = remainder.count()
     Dedup.releaseCheckpoints(remainder)
     // fully-emptied cells wrote no partition -> remove their dirs
     touched.filterNot(survivors).foreach { c =>
@@ -1933,22 +1935,19 @@ object Similarity {
         finally w.close()
       }
     }
-    before - after
+    deletedPerCell.map(_._2).sum
   }
 
   /** Search a persisted [[writeIvfIndex]] layout: assign the QUERY slice
     * against the persisted codebook (hier probe — per-vector
     * independent, so ranks 1..nProbe here equal what a full-corpus pass
-    * would give these vectors), collect the probed cell ids (bounded by
+    * would give these vectors), collect the probe rows (bounded by
     * queries × nProbe — the deliberate, documented driver step: the cell
     * list must become LITERALS for the partition filter to prune the
-    * scan), then read ONLY those partitions, join on `cell_id`, exact
-    * quantized cosine, per-query top-`k`.
-    *
-    * The query-side assignment is computed twice (once for the cell-list
-    * collect, once feeding the join) — it is queries×nProbe rows with a
-    * pushed-down `vec_id` scan filter, vanishing next to the index read
-    * it prunes; a checkpoint here would leak blocks past return.
+    * scan), then read ONLY those partitions, join them with the probe
+    * rows as a local relation on `cell_id`, exact quantized cosine,
+    * per-query top-`k`. The assignment runs once per call, and no pin
+    * outlives it.
     *
     * Result ≡ [[ivfTopK]] on the same codebook/probe parameters
     * (spec'd); `queries` needs the `(vec_id, embedding)` columns.
@@ -1962,18 +1961,19 @@ object Similarity {
     val spark = queries.sparkSession
     recoverIvfIndex(dir)
     val native = graft.plans.GraftExtensions.available(spark)
-    val book = spark.read.parquet(s"$dir/codebook")
+    val book = SegmentStore.readSide(spark, s"$dir/codebook")
     val cellCount = readIndexCells(spark, dir)
-    def probes = ivfAssignHierProbe(queries, cellCount, nProbe,
+    val assigned = ivfAssignHierProbe(queries, cellCount, nProbe,
       pCoarse = pCoarse, centroids = Some(book))
       .select(col("vec_id").as("query_id"), col("qv").as("query_qv"),
         col("qn").as("query_qn"), col("cell_id"))
-    val probedCells = probes.select("cell_id").distinct()
-      .collect().map(_.getLong(0))
+    val probeRows = assigned.collect()
+    val probes = spark.createDataFrame(probeRows.toSeq.asJava, assigned.schema)
+    val probedCells = probeRows.map(_.getLong(3)).distinct
     // the partition column reads back type-inferred (int); filter on it
     // BEFORE the cast so pruning sees the raw partition column, cast
     // after so the join key matches the codebook's long cell_id
-    val index = spark.read.parquet(s"$dir/index")
+    val index = SegmentStore.readSide(spark, s"$dir/index")
       .filter(col("cell_id").isin(probedCells.map(c => lit(c)): _*))
       .withColumn("cell_id", col("cell_id").cast("long"))
     val w = Window.partitionBy("query_id").orderBy(desc("sim"), asc("cand_id"))

@@ -6,7 +6,8 @@ import scala.collection.mutable
 /** Stage-level profile of one declared query (guide §7.1 without a UI):
   * run it through the noop sink with a listener and print, per stage,
   * task count, total executor run time, shuffle read/write bytes, and
-  * the stage's name/callsite — the empirical "where does the time go".
+  * the stage's name/callsite — the empirical "where does the time go" —
+  * and, per rep, the codegen compiles.
   *
   * Usage: runMain graft.tools.StageProf [reps] <query...>
   */
@@ -40,9 +41,13 @@ object StageProf {
         stages.clear()
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.allQueries(name)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
+        val (df, compiles) = Compiles.around {
+          val df = graft.SparkEntry.allQueries(name)(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+          df
+        }
         val wall = (System.nanoTime() - t0) / 1e9
+        println(f"REP $name rep$rep wall=$wall%.2fs $compiles")
         Thread.sleep(300) // let the listener bus drain
         spark.sparkContext.removeSparkListener(listener)
         graft.ops.Dedup.releaseCheckpoints(df)

@@ -2,8 +2,9 @@ package graft.tools
 
 /** Time individual declared queries: `runMain graft.tools.TimeQuery
   * <reps> <query...>` against `SPARK_GRAFT_SF_DIR` (default sf0.1),
-  * materializing through the noop sink like Bench. Prints per-rep and
-  * best times — the bench-noise antidote for A/B-ing one operator.
+  * materializing through the noop sink like Bench. Prints per-rep wall
+  * and codegen compiles, then best times — the bench-noise antidote for
+  * A/B-ing one operator.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -23,11 +24,15 @@ object TimeQuery {
     graft.SparkEntry.allQueries("q_stream_counts")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     for (name <- names) {
-      val times = (1 to reps).map { _ =>
+      val times = (1 to reps).map { rep =>
         val t0 = System.nanoTime()
-        val df = graft.SparkEntry.allQueries(name)(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
+        val (df, compiles) = Compiles.around {
+          val df = graft.SparkEntry.allQueries(name)(spark, sfDir)
+          df.write.format("noop").mode("overwrite").save()
+          df
+        }
         val sec = (System.nanoTime() - t0) / 1e9
+        println(f"REP $name rep$rep wall=$sec%.2f $compiles")
         // release pinned checkpoints + sweep residue between reps
         // (the Bench.execOnce hygiene) — checkpointing queries would
         // otherwise accumulate pins across reps and skew later ones

@@ -632,4 +632,21 @@ class Bm25IndexSpec extends AnyFunSuite with Matchers
     SegmentStore.deleteTree(java.nio.file.Paths.get(dir))
     maintained() shouldBe old
   }
+
+  test("the driver-side probe bucket equals pmod(hash(term), n) for " +
+    "random, empty, null and non-ASCII terms") {
+    val rnd = new scala.util.Random(42)
+    val terms: Seq[String] =
+      Seq("", " ", "dup", "Spark", "naïve", "straße", "日本語", "🙂 ok",
+        "a\u0000b", null) ++
+        Seq.fill(200)(rnd.nextString(rnd.nextInt(12))) ++
+        Seq.fill(200)(rnd.alphanumeric.take(rnd.nextInt(16)).mkString)
+    import spark.implicits._
+    val frame = terms.zipWithIndex.toDF("term", "i")
+    for (n <- Seq(1, 3, 8, 64, 1000)) {
+      val engine = frame.orderBy("i")
+        .select(pmod(hash(col("term")), lit(n))).collect().map(_.getInt(0))
+      terms.map(Bm25Index.termBucket(_, n)) shouldBe engine.toSeq
+    }
+  }
 }
